@@ -1198,7 +1198,7 @@ class Catalog:
                     raise NoSuchEntity(f"table {ch['name']} not found")
                 new_meta.pop("staged", None)  # a successful commit finalizes staged creates
                 expired_files.extend(
-                    self._roll_metadata_log(wh, row["metadata_seq"], meta, new_meta)
+                    self._roll_metadata_log(wh, row, meta, new_meta)
                 )
                 cur = st.execute(
                     "UPDATE tabulars SET metadata=?, metadata_seq=metadata_seq+1, updated_ms=?"
@@ -1231,15 +1231,17 @@ class Catalog:
     def _roll_metadata_log(
         self,
         wh: dict[str, Any],
-        metadata_seq: int,
+        row: Any,
         prev_meta: dict[str, Any] | None,
         new_meta: dict[str, Any],
     ) -> list[str]:
         """Archive the superseded metadata version and trim the log.
 
         Mirrors the reference's commit-time metadata maintenance
-        (server/tables.rs:1550-1737): the previous TableMetadata is written
-        to ``<location>/metadata/<seq>-<uuid>.metadata.json``, appended to
+        (server/tables.rs:1550-1737): the previous TableMetadata — the
+        stored document text of ``row``, of which ``prev_meta`` is the
+        unpacked form — is written to
+        ``<location>/metadata/<seq>-<uuid>.metadata.json``, appended to
         the new metadata's ``metadata-log``, and the log is trimmed to
         ``write.metadata.previous-versions-max`` (default from warehouse
         props, reference default 100). Returns the expired files to delete
@@ -1258,9 +1260,9 @@ class Catalog:
         mdir = Path(loc) / "metadata"
         try:
             mdir.mkdir(parents=True, exist_ok=True)
-            fpath = str(mdir / f"{metadata_seq:05d}-{new_uuid()[:8]}.metadata.json")
+            fpath = str(mdir / f"{row['metadata_seq']:05d}-{new_uuid()[:8]}.metadata.json")
             with open(fpath, "w") as f:
-                f.write(pack_metadata(prev_meta))
+                f.write(row["metadata"])
         except OSError:
             return []  # location not writable (e.g. registered external table)
         log = new_meta.setdefault("metadata-log", [])

@@ -309,7 +309,11 @@ def apply_commit(
     """
     for req in requirements:
         check_requirement(req, meta)
-    out = _deep_copy(meta)
+    # Updates replace top-level values and append to, filter or re-key
+    # top-level lists and dicts, but never edit an entry of one in place:
+    # copying each container one level deep keeps ``meta`` untouched
+    # while sharing its snapshots, schemas and specs.
+    out = {k: v.copy() if isinstance(v, (list, dict)) else v for k, v in meta.items()}
     for upd in updates:
         _apply_update(out, upd, max_format_version, allowed_format_versions)
     out["last-updated-ms"] = int(time.time() * 1000)
@@ -530,6 +534,9 @@ def _apply_update(  # noqa: C901 - intentionally a flat 24-way dispatch
         ids = set(upd["snapshot-ids"])
         meta["snapshots"] = [s for s in meta["snapshots"] if s["snapshot-id"] not in ids]
         meta["snapshot-log"] = [e for e in meta["snapshot-log"] if e["snapshot-id"] not in ids]
+        # refs to a removed snapshot go with it, as in the Iceberg
+        # builders (TableMetadataBuilder::remove_snapshots)
+        meta["refs"] = {n: r for n, r in meta["refs"].items() if r["snapshot-id"] not in ids}
         if meta["current-snapshot-id"] in ids:
             meta["current-snapshot-id"] = None
     elif action == "remove-snapshot-ref":

@@ -39,6 +39,7 @@ Query surface provided (reference test_spark.py parity):
 from __future__ import annotations
 
 import json
+import logging
 import time
 import uuid
 from pathlib import Path
@@ -3511,8 +3512,12 @@ class SparkTable:
             try:
                 del_entries = self._dv_local_merge(meta, pos_like, positions_pdf)
                 return data_entries + eq_dels, del_entries, len(pos_like)
-            except Exception:
-                pass  # distributed consolidation below
+            except Exception as e:
+                logging.getLogger(__name__).warning(
+                    "driver-side DV merge failed, using the distributed "
+                    "path: %r",
+                    e,
+                )
         merged = positions
         if pos_like:
             old = self._read_positional(meta, pos_like)
@@ -3744,6 +3749,7 @@ class SparkTable:
         container), same blob framing, same manifest entries — just no
         Spark job. Bounded by the caller's _DV_LOCAL_MERGE_MAX gate."""
         import os
+        import shutil
 
         from .dv import dv_payload, write_deletion_vector_blobs
 
@@ -3760,24 +3766,30 @@ class SparkTable:
         if not encoded:
             return []
         os.makedirs(str(out_dir), exist_ok=True)
-        rows = []
-        for i in range(0, len(encoded), _DV_BLOBS_PER_CONTAINER):
-            chunk = encoded[i : i + _DV_BLOBS_PER_CONTAINER]
-            cpath = str(out_dir / f"dv-{uuid.uuid4().hex[:12]}.puffin")
-            size, layout = write_deletion_vector_blobs(
-                cpath, chunk, snapshot_id=new_sid, sequence_number=seq
-            )
-            rows.append(
-                {
-                    "path": cpath,
-                    "size": size,
-                    "record_count": sum(c for _, _, c in chunk),
-                    "layout": json.dumps(
-                        {fp: list(v) for fp, v in layout.items()}
-                    ),
-                }
-            )
-        return self._dv_entries(meta, rows, seq)
+        try:
+            rows = []
+            for i in range(0, len(encoded), _DV_BLOBS_PER_CONTAINER):
+                chunk = encoded[i : i + _DV_BLOBS_PER_CONTAINER]
+                cpath = str(out_dir / f"dv-{uuid.uuid4().hex[:12]}.puffin")
+                size, layout = write_deletion_vector_blobs(
+                    cpath, chunk, snapshot_id=new_sid, sequence_number=seq
+                )
+                rows.append(
+                    {
+                        "path": cpath,
+                        "size": size,
+                        "record_count": sum(c for _, _, c in chunk),
+                        "layout": json.dumps(
+                            {fp: list(v) for fp, v in layout.items()}
+                        ),
+                    }
+                )
+            return self._dv_entries(meta, rows, seq)
+        except BaseException:
+            # the directory is this call's own and nothing references a
+            # container in it yet: a failure leaves no partial output
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
 
     def _dv_local_merge(
         self,

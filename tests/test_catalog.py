@@ -896,3 +896,87 @@ def test_list_namespaces_page_size_zero(catalog):
     assert page1 == [("a",)] and tok1 is not None
     page2, _ = catalog.list_namespaces("wh", page_token=tok1, page_size=10)
     assert page2 == [("b",)]
+
+
+def _add_snapshot(sid, manifests):
+    """add-snapshot + main ref move for a snapshot with out-of-line
+    manifest descriptors."""
+    snap = {
+        "snapshot-id": sid,
+        "timestamp-ms": 1000 + sid,
+        "manifest-list": f"snap-{sid}.avro",
+        "manifests": manifests,
+        "summary": {"operation": "append"},
+    }
+    return [
+        {"action": "add-snapshot", "snapshot": snap},
+        {"action": "set-snapshot-ref", "ref-name": "main", "snapshot-id": sid},
+    ]
+
+
+def _commit_archives_pre_commit_load(catalog, name, updates):
+    """Commit ``updates``; the version it supersedes is archived as a
+    file that unpacks to exactly what load_table returned before the
+    commit. Returns (archived file text, post-commit metadata)."""
+    from pathlib import Path
+
+    from lakekeeper_spark.catalog.metadoc import unpack_metadata
+
+    before, _ = catalog.load_table("wh", ["arc"], name)
+    after = catalog.commit_table("wh", ["arc"], name, [], updates)
+    text = Path(after["metadata-log"][-1]["metadata-file"]).read_text()
+    assert unpack_metadata(text) == before
+    return text, after
+
+
+def test_archived_metadata_equals_pre_commit_load(catalog, tmp_path):
+    """Commits archive the stored document text of the superseded
+    version as ``<seq>-<uuid>.metadata.json``: pooled out-of-line
+    manifests, plain registered documents, and the log trim with
+    delete-after-commit."""
+    import json
+    import os
+
+    from lakekeeper_spark.catalog.commit import new_table_metadata
+    from lakekeeper_spark.catalog.metadoc import POOL_KEY
+
+    catalog.create_namespace("wh", ["arc"])
+    # pooled: snapshots repeat a descriptor, so the stored form pools it
+    catalog.create_table("wh", ["arc"], "pooled", SCHEMA)
+    d0 = {"path": "m0.avro", "content": "data", "added-files-count": 1, "sequence-number": 1}
+    d1 = {"path": "m1.avro", "content": "data", "added-files-count": 2, "sequence-number": 2}
+    catalog.commit_table("wh", ["arc"], "pooled", [], _add_snapshot(1, [d0]))
+    catalog.commit_table("wh", ["arc"], "pooled", [], _add_snapshot(2, [d0, d1]))
+    text, _ = _commit_archives_pre_commit_load(
+        catalog, "pooled", _add_snapshot(3, [d0, d1])
+    )
+    assert json.loads(text)[POOL_KEY] == [d0, d1]
+
+    # plain: a registered foreign document without descriptors
+    doc = new_table_metadata("u-plain", str(tmp_path / "ext"), dict(SCHEMA))
+    doc["properties"] = {"owner": "ext"}
+    mfile = tmp_path / "plain.metadata.json"
+    mfile.write_text(json.dumps(doc))
+    catalog.register_table_from_file("wh", ["arc"], "plain", str(mfile))
+    text, _ = _commit_archives_pre_commit_load(
+        catalog, "plain", [{"action": "set-properties", "updates": {"k": "v"}}]
+    )
+    assert POOL_KEY not in json.loads(text)
+
+    # trim: expired archives leave the log and, after commit, the disk
+    catalog.commit_table(
+        "wh",
+        ["arc"],
+        "pooled",
+        [],
+        [{"action": "set-properties", "updates": {"write.metadata.previous-versions-max": "2"}}],
+    )
+    for i in range(3):
+        _, after = _commit_archives_pre_commit_load(
+            catalog, "pooled", [{"action": "set-properties", "updates": {"i": str(i)}}]
+        )
+    log = after["metadata-log"]
+    assert len(log) == 2
+    mdir = os.path.join(after["location"], "metadata")
+    on_disk = [f for f in os.listdir(mdir) if f.endswith(".metadata.json")]
+    assert sorted(on_disk) == sorted(os.path.basename(e["metadata-file"]) for e in log)

@@ -57,6 +57,8 @@ def update_sequences(draw):
                     "add-sort-order",
                     "set-default-sort-order",
                     "snapshot",
+                    "v3-snapshot",
+                    "remove-snapshots",
                     "set-properties",
                     "remove-properties",
                     "remove-snapshot-ref",
@@ -102,6 +104,39 @@ def update_sequences(draw):
             )
             updates.append(
                 {"action": "set-snapshot-ref", "ref-name": "main", "snapshot-id": sid}
+            )
+        elif kind == "v3-snapshot":
+            # row lineage: the engine stamps first-row-id onto the new
+            # snapshot and its data files (inline entries) or descriptors
+            sid = next_snapshot
+            next_snapshot += 1
+            rows = draw(st.integers(min_value=0, max_value=5))
+            if draw(st.booleans()):
+                files = {"manifest": [{"path": f"d{sid}", "content": "data", "record-count": rows}]}
+            else:
+                files = {"manifests": [{"path": f"m{sid}", "content": "data", "null-id-rows": rows}]}
+            updates.append({"action": "upgrade-format-version", "format-version": 3})
+            updates.append(
+                {
+                    "action": "add-snapshot",
+                    "snapshot": {
+                        "snapshot-id": sid,
+                        "timestamp-ms": 1000 + sid,
+                        **files,
+                        "summary": {"operation": "append"},
+                    },
+                }
+            )
+            updates.append(
+                {"action": "set-snapshot-ref", "ref-name": "main", "snapshot-id": sid}
+            )
+        elif kind == "remove-snapshots":
+            ids = st.integers(min_value=1, max_value=max(1, next_snapshot - 1))
+            updates.append(
+                {
+                    "action": "remove-snapshots",
+                    "snapshot-ids": draw(st.lists(ids, min_size=1, max_size=2)),
+                }
             )
         elif kind == "set-properties":
             key = draw(st.sampled_from(["a", "b", "c"]))

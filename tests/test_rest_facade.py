@@ -1118,3 +1118,69 @@ def test_pooled_load_table_payload_equivalent_and_smaller(rest, spark):
     # and the engine client's load path (which requests pooled) agrees
     loaded, _ = rest.load_table("wh", ["pw"], "t")
     assert loaded == plain_doc
+
+
+def test_responses_leave_in_one_send_with_nodelay(tmp_path, monkeypatch):
+    """A response written as headers then body, with Nagle's algorithm
+    on, makes a request that follows another on the same keep-alive
+    connection wait out the client's delayed ACK (~40 ms per commit
+    after a load). The accepted socket must set TCP_NODELAY and each
+    response must leave in one send — error replies too, with the
+    error body unchanged on the wire."""
+    import http.client
+    import json as _json
+    import socket
+
+    from lakekeeper_spark.rest.server import _Handler
+
+    nodelay: list[int] = []
+    sends: list[bytes] = []
+    real_setup = _Handler.setup
+
+    def recording_setup(self):
+        real_setup(self)
+        nodelay.append(
+            self.connection.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+        )
+        real_write = self.wfile.write
+
+        def write(b):
+            sends.append(bytes(b))
+            return real_write(b)
+
+        self.wfile.write = write
+
+    monkeypatch.setattr(_Handler, "setup", recording_setup)
+    catalog = Catalog(Metastore(str(tmp_path / "metastore.db")))
+    catalog.create_warehouse("wh", str(tmp_path / "warehouse"))
+    server = RestCatalogServer(catalog).start()
+    try:
+        host, port = server.httpd.server_address[:2]
+        conn = http.client.HTTPConnection(host, port)
+        conn.request("GET", "/catalog/v1/config?warehouse=wh")
+        resp = conn.getresponse()
+        body = resp.read()
+        assert resp.status == 200
+        assert resp.getheader("Content-Type") == "application/json"
+        assert _json.loads(body)["overrides"]["prefix"] == "wh"
+        # a second request on the same keep-alive connection: an error
+        conn.request("GET", "/catalog/v1/wh/namespaces/nope")
+        resp = conn.getresponse()
+        err = resp.read()
+        conn.close()
+    finally:
+        server.stop()
+    assert resp.status == 404
+    assert err == _json.dumps(
+        {
+            "error": {
+                "message": _json.loads(err)["error"]["message"],
+                "type": "NoSuchEntityException",
+                "code": 404,
+            }
+        }
+    ).encode()
+    assert nodelay == [1]
+    assert len(sends) == 2, [s[:40] for s in sends]
+    assert sends[0].startswith(b"HTTP/1.1 200") and sends[0].endswith(body)
+    assert sends[1].startswith(b"HTTP/1.1 404") and sends[1].endswith(err)

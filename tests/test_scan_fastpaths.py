@@ -193,3 +193,55 @@ def test_path_map_expr_tolerates_duplicate_paths(spark):
         F.try_element_at(col, F.lit("b")).alias("vb"),
     ).collect()[0]
     assert row.va == 1 and row.vb is None
+
+
+def test_dv_local_merge_failure_leaves_no_partial_puffin(
+    spark, catalog, monkeypatch, caplog
+):
+    """A driver-side DV merge whose container write fails part-way must
+    remove its partial .puffin output and log why before the distributed
+    path takes over: no file under the table is left unreferenced."""
+    import logging
+    import os
+    import sys
+    from pathlib import Path
+
+    import lakekeeper_spark.format.dv as dv_mod
+    from lakekeeper_spark.format.icelite import snapshot_entries
+
+    catalog.create_namespace("wh", ["fpw"], exists_ok=True)
+    df = spark.createDataFrame(ROWS, DDL).coalesce(1)
+    catalog.create_table("wh", ["fpw"], "t", struct_to_schema(df.schema))
+    t = SparkTable(spark, catalog, "wh", ["fpw"], "t")
+    t.append(df)
+    t._commit([], [{"action": "upgrade-format-version", "format-version": 3}])
+    t.delete_where("id >= 35", mode="merge-on-read")
+
+    real = dv_mod.write_deletion_vector_blobs
+    partial: list[str] = []
+
+    def write_partial_then_fail(path, *args, **kwargs):
+        # only the driver-side writer fails; executor tasks import the
+        # dv module fresh, so this patch never reaches them
+        if sys._getframe(1).f_code.co_name != "_write_deletion_vectors_local":
+            return real(path, *args, **kwargs)
+        Path(path).write_bytes(b"PFA1")
+        partial.append(path)
+        raise OSError("injected container write failure")
+
+    monkeypatch.setattr(dv_mod, "write_deletion_vector_blobs", write_partial_then_fail)
+    with caplog.at_level(logging.WARNING, logger="lakekeeper_spark.format.icelite"):
+        t.delete_where("id % 2 = 0 AND id >= 10", mode="merge-on-read")
+    assert partial and not any(os.path.exists(p) for p in partial)
+    assert "injected container write failure" in caplog.text
+    want = [i for i in range(35) if i < 10 or i % 2]
+    assert sorted(r.id for r in t.scan().collect()) == want
+    meta = t.metadata()
+    loc = meta["location"]
+    referenced = {
+        os.path.join(loc, e["path"])
+        for s in meta["snapshots"]
+        for e in snapshot_entries(s)
+    }
+    on_disk = {str(p) for p in Path(loc).rglob("*.puffin")}
+    assert on_disk and on_disk <= referenced
